@@ -26,6 +26,13 @@ from pyspark.sql.types import DoubleType, StructType
 
 import logging
 
+from .mv_shape import (
+    MvItem,
+    MvShape,
+    groups_are_keys,
+    plan_aggregates,
+    read_mv_shape,
+)
 from .table import LakehouseTable, PartitionField, Snapshot
 
 _log = logging.getLogger(__name__)
@@ -381,8 +388,7 @@ def _quoted_spans(s: str) -> list[tuple[int, int]]:
     """[start, end] index ranges of quoted spans ('...' literals and
     "..." idents), honoring backslash escapes and SQL's doubled-quote
     escape (''). Used to keep textual statement rewrites (metadata
-    tables, table_changes, time travel, HAVING alias substitution) out
-    of string literals.
+    tables, table_changes, time travel) out of string literals.
 
     Scanner family note: _split_top_level and _split_on_top_level_where
     track quotes with a flip-flop (each quote char toggles state, no ''
@@ -889,15 +895,47 @@ class LakehouseCatalog:
 
     # -- materialized views (stored query + refreshable table) --------------
 
-    # append-distributive plan nodes: a query whose analyzed plan is
-    # built ONLY of these maps each new base row to >= 0 result rows
-    # independently, so REFRESH can process the base's append-diff
-    # instead of re-running over the full table
-    _MV_NON_DISTRIBUTIVE = (
-        "Aggregate", "Join", "Window", "Distinct", "Limit", "Sort",
-        "Union", "Intersect", "Except", "Offset", "WithCTE",
-        "scalar-subquery", "exists-subquery", "in-subquery",
-    )
+    def _mv_shape(self, sql_text: str) -> MvShape | None:
+        """The MV query's shape read off Spark's parsed plan
+        (:func:`mv_shape.read_mv_shape`), or None when Spark cannot
+        parse it - such an MV full-refreshes."""
+        from pyspark.errors import ParseException
+
+        try:
+            plan = (
+                self.spark._jsparkSession.sessionState()
+                .sqlParser()
+                .parsePlan(sql_text)
+            )
+        except ParseException:
+            return None
+        return read_mv_shape(sql_text, plan)
+
+    def _mv_analyzed(
+        self, sql_text: str, joins: int = 0
+    ) -> tuple[DataFrame, list] | None:
+        """(DataFrame, its analyzed Aggregate nodes) when the analyzed
+        plan of ``sql_text`` passes the incremental tiers' structural
+        guard with exactly ``joins`` inner Joins
+        (:func:`mv_shape.plan_aggregates`); None otherwise, or when
+        analysis fails."""
+        try:
+            df = self.spark.sql(sql_text)
+            plan = df._jdf.queryExecution().analyzed()
+        except Exception:
+            return None
+        aggs = plan_aggregates(plan, joins)
+        return None if aggs is None else (df, aggs)
+
+    def _view_table(self, view: str) -> str | None:
+        """The one lakehouse table whose SQL view is named ``view``."""
+        hits = [
+            ident
+            for ns in self.list_namespaces()
+            for ident in self.list_tables(ns)
+            if self.view_name(ident) == view
+        ]
+        return hits[0] if len(hits) == 1 else None
 
     def _mv_incremental_base(self, sql_text: str) -> str | None:
         """The single base table of an append-distributive MV query, or
@@ -905,53 +943,25 @@ class LakehouseCatalog:
         join / window / set-op / subquery, or not exactly one table
         referenced). Detection is conservative: anything unrecognized
         falls back to full refresh - never to a wrong result."""
-        try:
-            plan = str(
-                self.spark.sql(sql_text)._jdf.queryExecution().analyzed()
-            )
-        except Exception:
+        shape = self._mv_shape(sql_text)
+        if shape is None:
             return None
-        if any(tok in plan for tok in self._MV_NON_DISTRIBUTIVE):
-            return None
+        analyzed = self._mv_analyzed(sql_text)
+        if analyzed is None or analyzed[1]:
+            return None  # not a pure projection / filter / explode
         if self._MV_NONDETERMINISTIC.search(sql_text):
             # a refresh-variant predicate/projection (current_date()
             # etc.) evaluates differently over each delta than it did
             # over the materialization - decline to full refresh
             return None
-        cands = [
-            ident
-            for ns in self.list_namespaces()
-            for ident in self.list_tables(ns)
-            if re.search(
-                rf"\b{re.escape(self.view_name(ident))}\b", sql_text
-            )
-        ]
-        return cands[0] if len(cands) == 1 else None
+        cands = {self._view_table(v) for v in shape.tables} - {None}
+        return cands.pop() if len(cands) == 1 else None
 
     # GROUP BY + distributive aggregates: the classic second tier of
     # incremental view maintenance. COUNT/SUM merge by addition,
     # MIN/MAX by least/greatest, so REFRESH can aggregate ONLY the
     # base's append-diff and MERGE the partials into the
     # materialization on the group keys - O(delta + touched groups).
-    _MV_AGG_SHAPE = re.compile(
-        r"^\s*SELECT\s+(?P<items>.+?)\s+FROM\s+(?P<ref>[A-Za-z_]\w*)"
-        r"(?:\s+WHERE\s+(?P<where>.+?))?"
-        r"(?:\s+GROUP\s+BY\s+(?P<keys>.+?))?\s*;?\s*$",
-        re.IGNORECASE | re.DOTALL,
-    )
-    # the arg may nest ONE paren level (r12: APPROX_PERCENTILE's
-    # array(p1, p2) form; single-call exprs like SUM(coalesce(a, b))).
-    # Deeper nesting falls out of the tier at the parse level - and
-    # _agg_item_rejected separately rejects args containing aggregate
-    # tokens, so the widening cannot admit a nested aggregate.
-    _MV_AGG_ITEM = re.compile(
-        r"^\s*(?P<op>APPROX_COUNT_DISTINCT|APPROX_PERCENTILE|"
-        r"PERCENTILE_APPROX|COUNT|SUM|MIN|MAX|AVG)\s*\("
-        r"(?P<distinct>\s*DISTINCT\b)?"
-        r"(?P<arg>(?:[^()]|\([^()]*\))*|\*)\)"
-        r"\s+AS\s+(?P<alias>[A-Za-z_]\w*)\s*$",
-        re.IGNORECASE,
-    )
 
     @staticmethod
     def _norm_op(op: str) -> str:
@@ -961,11 +971,6 @@ class LakehouseCatalog:
         keys on the one canonical name."""
         op = op.lower()
         return "approx_percentile" if op == "percentile_approx" else op
-    # expression group key: any non-aggregate select item with an alias
-    _MV_KEY_EXPR = re.compile(
-        r"^\s*(?P<expr>.+?)\s+AS\s+(?P<alias>[A-Za-z_]\w*)\s*$",
-        re.IGNORECASE | re.DOTALL,
-    )
     # a nondeterministic group key would re-derive DIFFERENTLY on every
     # refresh (delta partials landing in groups the materialization
     # never had) - refuse agg mode for these, conservatively by name
@@ -1100,7 +1105,7 @@ class LakehouseCatalog:
 
     def _approx_rewrite_items(
         self,
-        parts: list[str],
+        select: list[MvItem],
         aggs: list,
         agg_args: dict,
         vis_types: dict,
@@ -1112,20 +1117,15 @@ class LakehouseCatalog:
         builders. Returns None when a percentile item is outside the
         KLL tier (the caller declines agg mode)."""
         items = []
-        for part in parts:
-            im = self._MV_AGG_ITEM.match(part)
-            op = self._norm_op(im.group("op")) if im is not None else ""
+        for item in select:
+            op = self._norm_op(item.agg[0]) if item.agg else ""
+            a = item.name
             if op == "approx_count_distinct":
-                a = im.group("alias")
-                arg = im.group("arg").strip()
                 items.append(
-                    self._HLL_EST_FMT.format(arg=arg) + f" AS {a}"
+                    self._HLL_EST_FMT.format(arg=item.agg[2]) + f" AS {a}"
                 )
             elif op == "approx_percentile":
-                a = im.group("alias")
-                spec = self._kll_spec(
-                    im.group("arg").strip(), vis_types.get(a)
-                )
+                spec = self._kll_spec(item.agg[2], vis_types.get(a))
                 if spec is None:
                     return None
                 fam, ct, expr, ps, is_arr = spec
@@ -1134,7 +1134,7 @@ class LakehouseCatalog:
                 native = vis_types[a].simpleString()
                 items.append(f"CAST({est} AS {native}) AS {a}")
             else:
-                items.append(part)
+                items.append(item.sql)
         for alias, op in aggs:
             if op == "approx_count_distinct":
                 items.append(
@@ -1193,8 +1193,10 @@ class LakehouseCatalog:
         maintenance, which must re-derive each stored column over
         changelog rows. Conservative like :meth:`_mv_incremental_base`:
         unaliased aggregates, nondeterministic or base-column-shadowing
-        key expressions, subqueries, a second table, DISTINCT anywhere
-        but a single ``COUNT(DISTINCT expr)``, or a HAVING referencing
+        key expressions, subqueries, a second table, a DISTINCT
+        aggregate other than a single ``COUNT(DISTINCT expr)``, a
+        GROUP BY other than exactly the select-list keys (matched as
+        Spark resolves them), or a HAVING referencing
         an aggregate that is not in the select list all fall back to
         full refresh - never to a wrong result.
 
@@ -1231,70 +1233,45 @@ class LakehouseCatalog:
         NULL for an all-NULL group, matching AVG. Only double-typed
         AVG is accepted (a DECIMAL average would change type under the
         sum/count recomputation)."""
-        # HAVING tier: detach the predicate first and parse the
-        # UNFILTERED query - the MV stores the unfiltered aggregate as
-        # hidden state (the __mv_* partials precedent) so below-threshold
+        # HAVING tier: the MV stores the UNFILTERED aggregate as hidden
+        # state (the __mv_* partials precedent) so below-threshold
         # groups keep accumulating partials across refreshes, and the
         # filter applies in the view projection instead.
-        having = None
-        hm = re.search(
-            r"\s+HAVING\s+(?P<pred>.+?)\s*;?\s*$",
-            sql_text,
-            re.IGNORECASE | re.DOTALL,
-        )
-        if hm is not None:
-            having = hm.group("pred").strip()
-            sql_text = sql_text[: hm.start()].rstrip(" ;\n\t")
-        m = self._MV_AGG_SHAPE.match(sql_text)
-        if m is None:
+        shape = self._mv_shape(sql_text)
+        if shape is None or shape.items is None or shape.joins_sql:
             return None
-        if m.group("where") and self._MV_NONDETERMINISTIC.search(
-            m.group("where")
-        ):
+        where, having = shape.where, shape.having
+        if where and self._MV_NONDETERMINISTIC.search(where):
             # a refresh-variant WHERE would admit different rows into
             # the delta than the materialization's - decline
             return None
 
-        def norm(s: str) -> str:
-            return re.sub(r"\s+", " ", s.strip()).lower()
-
         # no GROUP BY = the global-aggregate tier: a one-row MV whose
         # refresh combines the diff's single partial-aggregate row
-        keys_raw = [
-            k.strip()
-            for k in _split_top_level(m.group("keys") or "")
-            if k.strip()
-        ]
-        parts = [p.strip() for p in _split_top_level(m.group("items"))]
         group_items: list[tuple[str, str | None]] = []  # (alias, expr)
         aggs: list[tuple[str, str]] = []  # visible (alias, op)
         agg_args: dict[str, str] = {}
         select_order: list[str] = []  # visible column order
         distinct_item: tuple[str, str] | None = None  # (alias, arg)
-        for part in parts:
-            if re.fullmatch(r"[A-Za-z_]\w*", part):
-                if part.startswith("__mv_"):
-                    return None  # reserved for engine-managed state
-                group_items.append((part, None))
-                select_order.append(part)
-                continue
-            im = self._MV_AGG_ITEM.match(part)
-            if im is not None:
-                arg = im.group("arg").strip()
-                op = self._norm_op(im.group("op"))
-                alias = im.group("alias")
+        for item in shape.items:
+            alias = item.name
+            if alias is None or alias.startswith("__mv_"):
+                return None  # unrecognized, or engine-managed state
+            if item.agg is not None:
+                raw_op, distinct, arg = item.agg
+                op = self._norm_op(raw_op)
                 if self._agg_item_rejected(op, arg, alias):
                     return None
                 if op in (
                     "approx_count_distinct",
                     "approx_percentile",
                 ) and (
-                    im.group("distinct")
+                    distinct
                     or arg == "*"
                     or self._MV_NONDETERMINISTIC.search(arg)
                 ):
                     return None
-                if im.group("distinct") and op != "approx_count_distinct":
+                if distinct and op != "approx_count_distinct":
                     # only a single COUNT(DISTINCT expr) has the
                     # finer-grain rewrite; SUM/AVG DISTINCT or a second
                     # distinct argument would multiply the grain
@@ -1310,77 +1287,22 @@ class LakehouseCatalog:
                 agg_args[alias] = arg
                 select_order.append(alias)
                 continue
-            km = self._MV_KEY_EXPR.match(part)
-            if km is None:
-                return None
-            expr = km.group("expr").strip()
-            alias = km.group("alias")
-            if alias.startswith("__mv_"):
-                return None
-            if re.search(
-                r"\b(COUNT|SUM|MIN|MAX|AVG)\s*\(", expr, re.IGNORECASE
-            ):
+            if item.has_agg:
                 return None  # aggregate disguised as a key expression
-            if self._MV_NONDETERMINISTIC.search(expr):
+            if item.expr is None:
+                if item.sql != alias:
+                    return None  # a qualified or quoted bare key
+            elif self._MV_NONDETERMINISTIC.search(item.expr):
                 return None
-            group_items.append((alias, expr))
+            group_items.append((alias, item.expr))
             select_order.append(alias)
         if not aggs or len(set(select_order)) != len(select_order):
             return None  # duplicate output names: ambiguous merge keys
-        # every DISTINCT in the (HAVING-detached) text must be the one
-        # parsed COUNT(DISTINCT ...) - a DISTINCT hiding in WHERE or an
-        # unparsed corner means this regex did not understand the query
-        n_distinct = len(
-            re.findall(r"\bDISTINCT\b", sql_text, re.IGNORECASE)
-        )
-        if n_distinct != (1 if distinct_item is not None else 0):
-            return None
-
-        # GROUP BY entries must each name a select-list group item: by
-        # alias, by bare column, by the spelled-out expression, or by
-        # select-list ordinal - and cover ALL group items exactly
-        if group_items and not keys_raw:
-            return None
-        by_alias = {a for a, _ in group_items}
-        by_expr = {norm(e): a for a, e in group_items if e is not None}
-        matched: set[str] = set()
-        for k in keys_raw:
-            if re.fullmatch(r"\d+", k):
-                i = int(k) - 1
-                if not (0 <= i < len(parts)):
-                    return None
-                target = parts[i]
-                if re.fullmatch(r"[A-Za-z_]\w*", target):
-                    if target not in by_alias:
-                        return None
-                    matched.add(target)
-                    continue
-                tm = self._MV_KEY_EXPR.match(target)
-                if tm is None or tm.group("alias") not in by_alias:
-                    return None
-                matched.add(tm.group("alias"))
-                continue
-            if re.fullmatch(r"[A-Za-z_]\w*", k):
-                if k not in by_alias:
-                    return None
-                matched.add(k)
-                continue
-            a = by_expr.get(norm(k))
-            if a is None:
-                return None
-            matched.add(a)
-        if matched != by_alias:
-            return None
         group_cols = [a for a, _ in group_items]
         key_exprs = {a: e for a, e in group_items if e is not None}
         # the FROM ref must be exactly one lakehouse table's view name
-        idents = [
-            ident
-            for ns in self.list_namespaces()
-            for ident in self.list_tables(ns)
-            if self.view_name(ident) == m.group("ref")
-        ]
-        if len(idents) != 1:
+        base = self._view_table(shape.tables[0])
+        if base is None:
             return None
         # expression keys must not shadow base-table columns: GROUP BY
         # <alias> (and the delta-side withColumn in CDC maintenance)
@@ -1388,7 +1310,7 @@ class LakehouseCatalog:
         if key_exprs:
             base_cols = {
                 f.name.lower()
-                for f in self.load_table(idents[0]).schema.fields
+                for f in self.load_table(base).schema.fields
             }
             # ... and must not shadow the changelog metadata columns
             # either: CDC maintenance withColumn()s each key expression
@@ -1400,18 +1322,16 @@ class LakehouseCatalog:
                 for a in key_exprs
             ):
                 return None
-        # plan-level guard: exactly the one Aggregate, nothing sneaky
-        # (a subquery in WHERE would add plan nodes the regex missed)
-        try:
-            self.register_views()
-            df = self.spark.sql(sql_text)
-            plan = str(df._jdf.queryExecution().analyzed())
-        except Exception:
+        # plan-level guard over the unfiltered query: exactly the one
+        # Aggregate, grouping by exactly the select-list keys
+        self.register_views()
+        analyzed = self._mv_analyzed(shape.body_sql)
+        if analyzed is None:
             return None
-        bad = tuple(
-            tok for tok in self._MV_NON_DISTRIBUTIVE if tok != "Aggregate"
-        )
-        if any(tok in plan for tok in bad) or plan.count("Aggregate") != 1:
+        df, plan_aggs = analyzed
+        if len(plan_aggs) != 1 or not groups_are_keys(
+            plan_aggs[0], shape.items
+        ):
             return None
         vis_types = {f.name: f.dataType for f in df.schema.fields}
         for alias, op in aggs:
@@ -1421,37 +1341,29 @@ class LakehouseCatalog:
                 return None  # DECIMAL/interval AVG: full refresh
         if having is not None:
             # rewrite into the MV's visible column space: each selected
-            # aggregate expression (same spelling, whitespace-tolerant)
+            # aggregate call (same op, DISTINCT and argument spelling)
             # becomes its alias; what remains may reference only group
             # keys and aliases - an aggregate NOT in the select list
             # has no stored state to filter on, so refuse (full refresh)
-            for part in parts:
-                im = self._MV_AGG_ITEM.match(part)
-                if im is None:
-                    continue
-                pat = re.compile(
-                    im.group("op")
-                    + r"\s*\(\s*"
-                    + (r"DISTINCT\s+" if im.group("distinct") else "")
-                    + re.escape(im.group("arg").strip())
-                    + r"\s*\)",
-                    re.IGNORECASE,
+            pieces, last = [], 0
+            for start, stop, call in shape.having_aggs:
+                alias = next(
+                    (
+                        item.name
+                        for item in shape.items
+                        if call is not None
+                        and item.agg is not None
+                        and item.agg[0].lower() == call[0].lower()
+                        and item.agg[1] == call[1]
+                        and item.agg[2].lower() == call[2].lower()
+                    ),
+                    None,
                 )
-                # quote-aware: an aggregate SPELLING inside a HAVING
-                # string literal (lang = 'COUNT(n_chars)') must stay a
-                # literal, not become an alias reference
-                having = _sub_outside_quotes(
-                    pat, im.group("alias"), having
-                )
-            leftover = _sub_outside_quotes(
-                re.compile(
-                    r"\b(COUNT|SUM|MIN|MAX|AVG)\s*\(", re.IGNORECASE
-                ),
-                "\x00",
-                having,
-            )
-            if "\x00" in leftover:
-                return None  # an aggregate with no stored column
+                if alias is None:
+                    return None  # an aggregate with no stored column
+                pieces += [having[last:start], alias]
+                last = stop + 1
+            having = "".join(pieces) + having[last:]
             try:
                 # validate against the unfiltered output schema (catches
                 # unknown identifiers, subqueries, type errors)
@@ -1488,7 +1400,7 @@ class LakehouseCatalog:
         if distinct_item is None:
             # ---- user-grain storage (bare or expression keys) -------
             has_avg = any(op == "avg" for _, op in aggs)
-            store_items = list(parts)
+            store_items = [item.sql for item in shape.items]
             if has_approx or has_kll:
                 # APPROX_COUNT_DISTINCT tier (r11): the MV stores a
                 # mergeable DataSketches HLL per group (__mv_hll_*)
@@ -1502,7 +1414,7 @@ class LakehouseCatalog:
                 # 100 TB appends. DML in the range declines to full
                 # refresh (sketches are not invertible).
                 store_items = self._approx_rewrite_items(
-                    store_items, aggs, agg_args, vis_types
+                    shape.items, aggs, agg_args, vis_types
                 )
                 if store_items is None:
                     return None  # ineligible sketch item: plain MV
@@ -1558,10 +1470,10 @@ class LakehouseCatalog:
                 # plain query would discard it)
                 store_query = (
                     f"SELECT {', '.join(store_items)} FROM "
-                    + m.group("ref")
+                    + shape.tables[0]
                 )
-                if m.group("where"):
-                    store_query += f" WHERE {m.group('where')}"
+                if where:
+                    store_query += f" WHERE {where}"
                 if group_by_sql:
                     store_query += (
                         f" GROUP BY {', '.join(group_by_sql)}"
@@ -1580,13 +1492,13 @@ class LakehouseCatalog:
                     # creation with AnalysisException)
                     return None
             return (
-                idents[0],
+                base,
                 group_cols,
                 aggs,
                 store_query,
                 having,
                 agg_args,
-                m.group("where"),
+                where,
                 key_exprs,
                 None,
             )
@@ -1677,10 +1589,10 @@ class LakehouseCatalog:
         def build_store() -> str:
             q = (
                 f"SELECT {', '.join(inner_items)} FROM "
-                + m.group("ref")
+                + shape.tables[0]
             )
-            if m.group("where"):
-                q += f" WHERE {m.group('where')}"
+            if where:
+                q += f" WHERE {where}"
             return q + f" GROUP BY {', '.join(inner_group_by)}"
 
         # CDC-invertibility needs the STORED partial types (a SUM
@@ -1718,13 +1630,13 @@ class LakehouseCatalog:
             "order": select_order,
         }
         return (
-            idents[0],
+            base,
             group_cols + [dv_col],
             inner_aggs,
             build_store(),
             having,
             inner_args,
-            m.group("where"),
+            where,
             {**key_exprs, dv_col: f"({dv_arg})"},
             view_agg,
         )
@@ -1737,28 +1649,6 @@ class LakehouseCatalog:
     # and MERGEs the partials - O(delta x dim-match + touched groups),
     # never the fact history. A moved dim (or fact DML in range) falls
     # back to full refresh - never to a wrong result.
-    _MV_JOIN_AGG_SHAPE = re.compile(
-        r"^\s*SELECT\s+(?P<items>.+?)\s+FROM\s+(?P<f>[A-Za-z_]\w*)\s+"
-        r"(?P<joins>(?:INNER\s+)?JOIN\s+.+?)"
-        r"(?:\s+WHERE\s+(?P<where>.+?))?"
-        r"\s+GROUP\s+BY\s+(?P<keys>.+?)\s*;?\s*$",
-        re.IGNORECASE | re.DOTALL,
-    )
-    # one step of the join chain: JOIN <dim> ON <cond>, the condition
-    # ending where the next JOIN begins (or the chain ends). Real star
-    # queries join several dims (q05's shape) - the tier handles
-    # fact JOIN d1 ON ... JOIN d2 ON ... JOIN dN ON ... uniformly.
-    _MV_JOIN_STEP = re.compile(
-        r"(?:INNER\s+)?JOIN\s+(?P<d>[A-Za-z_]\w*)\s+ON\s+"
-        r"(?P<on>.+?)(?=\s+(?:INNER\s+)?JOIN\s+|\s*$)",
-        re.IGNORECASE | re.DOTALL,
-    )
-    _MV_JOIN_KEY = re.compile(
-        r"^\s*(?:(?P<qual>[A-Za-z_]\w*)\s*\.\s*)?(?P<col>[A-Za-z_]\w*)"
-        r"(?:\s+AS\s+(?P<alias>[A-Za-z_]\w*))?\s*$",
-        re.IGNORECASE,
-    )
-
     def _mv_join_agg_spec(self, sql_text: str) -> (
         tuple[
             str,
@@ -1780,139 +1670,66 @@ class LakehouseCatalog:
         or extra plan nodes all decline to full refresh. Which side is
         the FACT is positional (the left table): its appends refresh
         incrementally, every joined side is a pinned dim."""
-        if re.search(
-            r"\b(DISTINCT|HAVING|LEFT|RIGHT|FULL|CROSS|SEMI|ANTI)\b",
-            sql_text,
-            re.IGNORECASE,
+        shape = self._mv_shape(sql_text)
+        if (
+            shape is None
+            or shape.items is None
+            or not shape.joins_sql
+            or shape.group_by_sql is None
+            or shape.having is not None
         ):
-            return None
-        m = self._MV_JOIN_AGG_SHAPE.match(sql_text)
-        if m is None:
-            return None
-        steps = list(self._MV_JOIN_STEP.finditer(m.group("joins")))
-        if not steps:
-            return None
-        # the steps must tile the whole join chain (anything the step
-        # regex could not account for - stray tokens between ON and the
-        # next JOIN - is a shape we don't understand: decline)
-        pos = 0
-        for st in steps:
-            if m.group("joins")[pos : st.start()].strip():
-                return None
-            pos = st.end()
-        if m.group("joins")[pos:].strip():
             return None
         # a refresh-variant ON/WHERE (current_date() etc.) would filter
         # only the DELTA with the new value while materialized rows
         # keep the old one - decline to full refresh
         if any(
-            self._MV_NONDETERMINISTIC.search(st.group("on"))
-            for st in steps
+            self._MV_NONDETERMINISTIC.search(on) for on in shape.ons
         ) or (
-            m.group("where")
-            and self._MV_NONDETERMINISTIC.search(m.group("where"))
+            shape.where and self._MV_NONDETERMINISTIC.search(shape.where)
         ):
             return None
-        f_view = m.group("f")
-        d_views = [st.group("d") for st in steps]
-        lowers = [f_view.lower()] + [d.lower() for d in d_views]
+        lowers = [v.lower() for v in shape.tables]
         if len(set(lowers)) != len(lowers):
             return None  # self-join: one delta side is not enough
-
-        def resolve(view: str) -> str | None:
-            hits = [
-                ident
-                for ns in self.list_namespaces()
-                for ident in self.list_tables(ns)
-                if self.view_name(ident) == view
-            ]
-            return hits[0] if len(hits) == 1 else None
-
-        fact = resolve(f_view)
-        dims = [resolve(d) for d in d_views]
+        fact, *dims = [self._view_table(v) for v in shape.tables]
         if fact is None or any(d is None for d in dims):
             return None
         group_cols: list[str] = []
-        key_names: dict[str, set[str]] = {}  # out name -> GROUP BY spellings
         aggs: list[tuple[str, str]] = []
         agg_args: dict[str, str] = {}
-        out_names: list[str] = []
-        parts = [p.strip() for p in _split_top_level(m.group("items"))]
-        for i, part in enumerate(parts):
-            im = self._MV_AGG_ITEM.match(part)
-            if im is not None:
-                op = self._norm_op(im.group("op"))
-                arg = im.group("arg").strip()
-                alias = im.group("alias")
+        for item in shape.items:
+            name = item.name
+            if name is None or name.startswith("__mv_"):
+                return None
+            if item.agg is not None:
+                raw_op, distinct, arg = item.agg
+                op = self._norm_op(raw_op)
                 if (
                     op == "avg"
-                    or im.group("distinct")
-                    or self._agg_item_rejected(op, arg, alias)
-                    or self._MV_NONDETERMINISTIC.search(arg)
+                    or distinct
+                    or self._agg_item_rejected(op, arg, name)
                 ):
                     return None
-                aggs.append((alias, op))
-                agg_args[alias] = arg
-                out_names.append(alias)
-                continue
-            km = self._MV_JOIN_KEY.match(part)
-            if km is None:
+                aggs.append((name, op))
+                agg_args[name] = arg
+            elif item.ref:
+                group_cols.append(name)
+            else:
                 return None  # expression key: decline
-            name = km.group("alias") or km.group("col")
-            if name.startswith("__mv_"):
-                return None
-            group_cols.append(name)
-            out_names.append(name)
-            spellings = {name.lower(), km.group("col").lower(), str(i + 1)}
-            if km.group("qual"):
-                spellings.add(
-                    f"{km.group('qual')}.{km.group('col')}".lower()
-                )
-            key_names[name] = spellings
         if not aggs or not group_cols:
             return None  # global join-agg: keep v1 keyed (merge path)
-        if len(set(out_names)) != len(out_names):
-            return None
-
-        def norm(s: str) -> str:
-            return re.sub(r"\s*\.\s*", ".", re.sub(r"\s+", " ", s.strip())).lower()
-
-        matched: set[str] = set()
-        for k in _split_top_level(m.group("keys")):
-            kn = norm(k)
-            hit = next(
-                (
-                    name
-                    for name, sp in key_names.items()
-                    if kn in sp
-                ),
-                None,
-            )
-            if hit is None:
-                return None
-            matched.add(hit)
-        if matched != set(key_names):
+        names = group_cols + [a for a, _ in aggs]
+        if len(set(names)) != len(names):
             return None
         # plan guard: exactly one Aggregate over exactly N INNER
-        # joins, nothing else non-distributive (subqueries, windows, a
-        # hidden extra join from a view definition)
-        try:
-            self.register_views()
-            plan = str(
-                self.spark.sql(sql_text)._jdf.queryExecution().analyzed()
-            )
-        except Exception:
-            return None
-        bad = tuple(
-            tok
-            for tok in self._MV_NON_DISTRIBUTIVE
-            if tok not in ("Aggregate", "Join")
-        )
+        # joins, nothing else (subqueries, windows, a hidden extra
+        # join from a view definition), grouping by exactly the keys
+        self.register_views()
+        analyzed = self._mv_analyzed(sql_text, joins=len(dims))
         if (
-            any(tok in plan for tok in bad)
-            or plan.count("Aggregate") != 1
-            or plan.count("Join") != len(dims)
-            or plan.count("Join Inner") != len(dims)
+            analyzed is None
+            or len(analyzed[1]) != 1
+            or not groups_are_keys(analyzed[1][0], shape.items)
         ):
             return None
         return fact, dims, group_cols, aggs, agg_args
@@ -4193,10 +4010,15 @@ class LakehouseCatalog:
         two gate jobs into one aggregate; this removes that remaining
         job by computing both gates in the SAME job that materializes
         the delta. Returns (checkpointed frame, row count, has NULL
-        group key). The metrics are computed over exactly the rows
-        being materialized, and the checkpointed frame's plan is a
-        fresh LogicalRDD, so no downstream action re-fires the
-        collector."""
+        group key).
+
+        A retried job cannot double-count. The collector is the top
+        node of the plan being checkpointed, so it runs in the
+        checkpoint job's result stage and sees only the checkpointed
+        rows; Spark applies a result task's accumulator updates once
+        per partition, even when the task is retried. And the
+        checkpointed frame's plan is a fresh LogicalRDD without the
+        collector, so no later action over it re-fires the metrics."""
         from functools import reduce
 
         from pyspark.sql import Observation
@@ -4425,8 +4247,8 @@ class LakehouseCatalog:
           estimator), falling to full refresh when unprovable."""
         from pyspark.sql.types import IntegerType, LongType
 
-        m = self._MV_JOIN_AGG_SHAPE.match(sql_text)
-        if m is None:
+        shape = self._mv_shape(sql_text)
+        if shape is None or shape.items is None:
             return None
         try:
             vis = {
@@ -4453,27 +4275,24 @@ class LakehouseCatalog:
             return None
         if has_sketch:
             items = self._approx_rewrite_items(
-                [p.strip() for p in _split_top_level(m.group("items"))],
-                aggs,
-                agg_args,
-                vis,
+                shape.items, aggs, agg_args, vis
             )
             if items is None:
                 return None  # ineligible sketch item (KLL spec)
         else:
-            items = [m.group("items").strip(), "COUNT(*) AS __mv_rows"]
+            items = [shape.items_sql, "COUNT(*) AS __mv_rows"]
             for alias, op in aggs:
                 if op == "sum":
                     items.append(
                         f"COUNT({agg_args[alias]}) AS __mv_nn_{alias}"
                     )
         q = (
-            f"SELECT {', '.join(items)} FROM {m.group('f')} "
-            f"{m.group('joins')}"
+            f"SELECT {', '.join(items)} FROM {shape.tables[0]} "
+            f"{shape.joins_sql}"
         )
-        if m.group("where"):
-            q += f" WHERE {m.group('where')}"
-        q += f" GROUP BY {m.group('keys')}"
+        if shape.where:
+            q += f" WHERE {shape.where}"
+        q += f" GROUP BY {shape.group_by_sql}"
         if has_sketch and not self._analyzes(q):
             # HLL_SKETCH_AGG rejects this argument (a type outside
             # INT/BIGINT/STRING/BINARY, or the rsd form
@@ -4532,28 +4351,22 @@ class LakehouseCatalog:
             or any(name not in agg_args for name, _op in aggs)
         ):
             return NotImplemented  # pre-CDC join MV without the state
-        m = self._MV_JOIN_AGG_SHAPE.match(sql_text)
-        if m is None:
+        shape = self._mv_shape(sql_text)
+        if shape is None or shape.items is None:
             return NotImplemented
-        parts = [p.strip() for p in _split_top_level(m.group("items"))]
         sel: list[str] = []
-        for part in parts:
-            im = self._MV_AGG_ITEM.match(part)
-            if im is None:
-                sel.append(part)  # a group key, spelled as stored
-            else:
-                arg = im.group("arg").strip()
-                if arg != "*":
-                    sel.append(
-                        f"({arg}) AS __mv_arg_{im.group('alias')}"
-                    )
+        for item in shape.items:
+            if item.agg is None:
+                sel.append(item.sql)  # a group key, spelled as stored
+            elif item.agg[2] != "*":
+                sel.append(f"({item.agg[2]}) AS __mv_arg_{item.name}")
         sel.append(f"{ch_view}._change_type AS __mv_ct")
         pre = (
-            f"SELECT {', '.join(sel)} FROM {m.group('f')} "
-            f"{m.group('joins')}"
+            f"SELECT {', '.join(sel)} FROM {shape.tables[0]} "
+            f"{shape.joins_sql}"
         )
-        if m.group("where"):
-            pre += f" WHERE {m.group('where')}"
+        if shape.where:
+            pre += f" WHERE {shape.where}"
         from pyspark.errors import AnalysisException
 
         bound: list[str] = []
@@ -4680,32 +4493,30 @@ class LakehouseCatalog:
             t, aggs, agg_args
         ):
             return NotImplemented
-        m = self._MV_JOIN_AGG_SHAPE.match(sql_text)
-        sm = self._MV_JOIN_AGG_SHAPE.match(store_sql)
-        if m is None or sm is None:
+        shape = self._mv_shape(sql_text)
+        store = self._mv_shape(store_sql)
+        if (
+            shape is None
+            or shape.items is None
+            or store is None
+            or store.items is None
+        ):
             return NotImplemented
         key_src: dict[str, str] = {}
-        for part in _split_top_level(m.group("items")):
-            part = part.strip()
-            if self._MV_AGG_ITEM.match(part):
+        for item in shape.items:
+            if item.agg is not None:
                 continue
-            km = self._MV_JOIN_KEY.match(part)
-            if km is None:
+            if not item.ref:
                 return NotImplemented
-            name = km.group("alias") or km.group("col")
-            key_src[name] = (
-                f"{km.group('qual')}.{km.group('col')}"
-                if km.group("qual")
-                else km.group("col")
-            )
+            key_src[item.name] = item.expr or item.sql
         if set(key_src) != set(group_cols):
             return NotImplemented
         sel = ", ".join(f"{key_src[g]} AS {g}" for g in group_cols)
         probe = (
-            f"SELECT {sel} FROM {m.group('f')} {m.group('joins')}"
+            f"SELECT {sel} FROM {shape.tables[0]} {shape.joins_sql}"
         )
-        if m.group("where"):
-            probe += f" WHERE {m.group('where')}"
+        if shape.where:
+            probe += f" WHERE {shape.where}"
         with self._changelog_bound(ch_ident, ch_df):
             try:
                 touched = (
@@ -4734,11 +4545,11 @@ class LakehouseCatalog:
             f"({tup}) IN (SELECT {', '.join(group_cols)} FROM {tv})"
         )
         re_sql = (
-            f"SELECT {sm.group('items')} FROM {sm.group('f')} "
-            f"{sm.group('joins')} WHERE "
-            + (f"({sm.group('where')}) AND " if sm.group("where") else "")
+            f"SELECT {store.items_sql} FROM {store.tables[0]} "
+            f"{store.joins_sql} WHERE "
+            + (f"({store.where}) AND " if store.where else "")
             + filt
-            + f" GROUP BY {sm.group('keys')}"
+            + f" GROUP BY {store.group_by_sql}"
         )
         try:
             touched.createOrReplaceTempView(tv)

@@ -183,9 +183,3 @@ def bpe_encode(
     if count_col:
         out = out.withColumn(count_col, F.size(F.col(out_col)))
     return out
-
-
-def bpe_vocab(merges: list[tuple[str, str]]) -> list[str]:
-    """The word-piece vocabulary a merge list induces (merged symbols in
-    fit order; base characters come from the corpus at encode time)."""
-    return [a + b for a, b in merges]

@@ -30,10 +30,18 @@ from pyspark.sql import functions as F
 from .embedding import _token_u32
 
 
+def _check_order(n) -> None:
+    """Only unigrams and bigrams are modeled; any other order would
+    silently be computed as bigrams."""
+    if n not in (1, 2):
+        raise ValueError(f"dsir: ngrams entries must be 1 or 2, got {n!r}")
+
+
 def _grams(text: Column, sep: str, n: int) -> Column:
     """array<string> of n-grams over the sep-split tokens; bigrams join
     adjacent tokens with a char no tokenizer emits (\\x1f) so ("a b",
     "c") and ("a", "b c") hash apart."""
+    _check_order(n)
     toks = F.split(text, sep)
     if n == 1:
         return toks
@@ -122,6 +130,8 @@ def _logw_arrow(log_ratios: list[float], ngrams: tuple):
     table = [float(x) for x in log_ratios]
     nb = len(table)
     orders = tuple(ngrams)
+    for n in orders:
+        _check_order(n)
     cache: dict[str, int] = {}
     _CACHE_CAP = 1 << 16
 

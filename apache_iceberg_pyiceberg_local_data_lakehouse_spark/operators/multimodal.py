@@ -43,15 +43,6 @@ DECODED_SCHEMA = StructType(
 )
 
 
-def have_real_codecs() -> bool:
-    try:
-        import PIL  # noqa: F401
-
-        return True
-    except ImportError:
-        return False
-
-
 def _decode_real(content: bytes) -> tuple[int, int]:
     """Real decode path - requires an imaging library.
 

@@ -218,11 +218,15 @@ class StagedReplaceConflict(ValueError):
 # Scan-plan memo (r15): (session, location, snapshot uuid+version, file
 # set, pos flag, extra fields) -> the base read DataFrame. Module-level
 # because load_table constructs a fresh LakehouseTable per call; bounded
-# LRU so dead snapshots age out. See _read_data_plain.
+# LRU so dead snapshots age out. See _read_data_plain. The lock guards
+# the dict operations only (scans run on the MV watcher and scheduler
+# threads too); the scan planning itself runs outside it.
+import threading as _threading  # noqa: E402
 from collections import OrderedDict as _OrderedDict  # noqa: E402
 
 _SCAN_DF_CACHE: _OrderedDict = _OrderedDict()
 _SCAN_DF_CACHE_MAX = 32
+_SCAN_DF_LOCK = _threading.Lock()
 
 
 class LakehouseTable:
@@ -1045,7 +1049,9 @@ class LakehouseTable:
                 "\n".join(e["path"] for e in entries).encode()
             ).hexdigest()
             key = (
-                id(self.spark),
+                # Spark's own session identity: unlike id(), never
+                # reused by a later session
+                self.spark._jsparkSession.sessionUUID(),
                 self.location,
                 snap.snapshot_id,
                 snap.version,
@@ -1056,17 +1062,19 @@ class LakehouseTable:
                 ),
                 digest,
             )
-            hit = _SCAN_DF_CACHE.get(key)
-            if hit is not None:
-                _SCAN_DF_CACHE.move_to_end(key)
-                return hit
+            with _SCAN_DF_LOCK:
+                hit = _SCAN_DF_CACHE.get(key)
+                if hit is not None:
+                    _SCAN_DF_CACHE.move_to_end(key)
+                    return hit
         df = self._read_data_plain_uncached(
             entries, snap, with_pos, extra_fields
         )
         if key is not None:
-            _SCAN_DF_CACHE[key] = df
-            while len(_SCAN_DF_CACHE) > _SCAN_DF_CACHE_MAX:
-                _SCAN_DF_CACHE.popitem(last=False)
+            with _SCAN_DF_LOCK:
+                _SCAN_DF_CACHE[key] = df
+                while len(_SCAN_DF_CACHE) > _SCAN_DF_CACHE_MAX:
+                    _SCAN_DF_CACHE.popitem(last=False)
         return df
 
     def _read_data_plain_uncached(
@@ -3534,12 +3542,6 @@ class LakehouseTable:
         )
 
     # -- maintenance hooks (driven by maintenance.py) ------------------------
-
-    def referenced_files(self) -> set[str]:
-        refs: set[str] = set()
-        for s in self.snapshots():
-            refs.update(e["path"] for e in s.manifest)
-        return refs
 
     def delete_metadata_version(self, version: int) -> None:
         os.remove(self._version_path(version))

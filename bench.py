@@ -534,6 +534,9 @@ def main() -> None:
         # matrix, SCD2, classifier scoring) - one cold sample each,
         # excluded from `value` for baseline comparability
         "depth": depth,
+        # the session the numbers came from, as Spark resolved it
+        "master": spark.sparkContext.master,
+        "parallelism": spark.sparkContext.defaultParallelism,
     }
     print(json.dumps(out))
 

@@ -2654,6 +2654,26 @@ def test_dsir_importance_resampling(spark):
     assert "TakeOrderedAndProject" in plan
 
 
+@pytest.mark.parametrize(
+    "sep", [" ", r"\s+"], ids=["arrow_path", "catalyst_path"]
+)
+def test_dsir_rejects_gram_orders_outside_1_2(spark, sep):
+    """Only unigrams and bigrams are modeled: any other order raises on
+    both weighers (and on the fit) instead of being computed as
+    bigrams."""
+    from apache_iceberg_pyiceberg_local_data_lakehouse_spark.operators.dsir import (
+        dsir_fit,
+        dsir_logweights,
+    )
+
+    df = spark.createDataFrame([("a b c",)], "text string")
+    for bad in [(1, 3), (0,), (2, 4)]:
+        with pytest.raises(ValueError, match="ngrams"):
+            dsir_logweights(df, [0.0] * 8, sep=sep, ngrams=bad)
+        with pytest.raises(ValueError, match="ngrams"):
+            dsir_fit(df, df, sep=sep, ngrams=bad, n_buckets=8)
+
+
 def test_dsir_arrow_matches_catalyst_exactly(spark, sf_small):
     """r15: the default-sep DSIR weight pass moved to an Arrow
     pandas_udf (grams hashed once per doc, bounded per-task md5 memo -

@@ -848,6 +848,129 @@ def test_mv_agg_null_group_key_falls_back(catalog, spark):
     assert catalog.refresh_materialized_view("gold.by_cat3") is None
 
 
+def test_mv_agg_null_key_delta_probe_falls_back(catalog, spark, monkeypatch):
+    """A base with no NULL group key gains one through an append: the
+    delta checkpoint's observed probe reports it, and the refresh takes
+    the full-refresh fallback and equals a recompute."""
+    t = catalog.create_table("gold.nk", _sales_df(spark, []).schema)
+    t.append(_sales_df(spark, [("a", 1), ("b", 5)]))
+    q = "SELECT cat, COUNT(*) AS n, SUM(v) AS s FROM gold_nk GROUP BY cat"
+    mv = catalog.create_materialized_view("gold.nk_mv", q)
+    assert mv.properties()["mv.refresh_mode"] == "agg"
+    probes = []
+    real = LakehouseCatalog._checkpoint_group_probe
+
+    def spy(self, df, group_cols):
+        out = real(self, df, group_cols)
+        probes.append(out[1:])
+        return out
+
+    monkeypatch.setattr(LakehouseCatalog, "_checkpoint_group_probe", spy)
+    t.append(_sales_df(spark, [(None, 7), ("a", 2)]))
+    snap = catalog.refresh_materialized_view("gold.nk_mv")
+    assert probes == [(2, True)]
+    assert snap.operation == "overwrite"  # the fallback, not a merge
+    got = catalog.sql("SELECT * FROM gold_nk_mv").collect()
+    assert sorted(got, key=repr) == sorted(catalog.sql(q).collect(), key=repr)
+
+
+# Subquery filters make a row's membership depend on the WHOLE base
+# table, so no incremental tier may take them: a delta-only refresh
+# would see only the delta inside the subquery. Each of these refreshed
+# to [] after one append while the recompute was non-empty.
+_SUBQUERY_MVS = {
+    "exists_projection": (
+        "SELECT cat, v FROM gold_sq o WHERE EXISTS "
+        "(SELECT 1 FROM gold_sq i WHERE i.v = o.v + 1)"
+    ),
+    "in_agg": (
+        "SELECT cat, COUNT(*) AS n FROM gold_sq "
+        "WHERE v IN (SELECT v + 1 FROM gold_sq) GROUP BY cat"
+    ),
+    "in_join_agg": (
+        "SELECT gold_sqd.region AS region, COUNT(*) AS n FROM gold_sq "
+        "JOIN gold_sqd ON gold_sq.cat = gold_sqd.cat "
+        "WHERE v IN (SELECT v + 1 FROM gold_sq) GROUP BY gold_sqd.region"
+    ),
+}
+
+
+@pytest.mark.parametrize("name", sorted(_SUBQUERY_MVS))
+def test_mv_subquery_forces_full_refresh(catalog, spark, name):
+    q = _SUBQUERY_MVS[name]
+    t = catalog.create_table("gold.sq", _sales_df(spark, []).schema)
+    t.append(_sales_df(spark, [("a", 1), ("b", 5)]))
+    d = catalog.create_table(
+        "gold.sqd",
+        spark.createDataFrame([], "cat string, region string").schema,
+    )
+    d.append(
+        spark.createDataFrame(
+            [(c, "x" if c in "ace" else "y") for c in "abcde"],
+            "cat string, region string",
+        )
+    )
+    mv = catalog.create_materialized_view("gold.sq_mv", q)
+    props = mv.properties()
+    assert props.get("mv.refresh_mode") is None, q
+    assert "mv.base_table" not in props, q
+    t.append(_sales_df(spark, [("c", 2), ("d", 0), ("e", 6)]))
+    catalog.refresh_materialized_view("gold.sq_mv")
+    want = sorted(catalog.sql(q).collect(), key=repr)
+    assert want  # the recompute is non-empty
+    got = catalog.sql("SELECT * FROM gold_sq_mv").collect()
+    assert sorted(got, key=repr) == want
+
+
+# (WHERE, HAVING as written, HAVING as stored over the visible columns)
+_CLAUSE_SPELLINGS = {
+    # clause keywords inside a literal must not move a clause boundary
+    "keywords_in_literal": ("note = 'x GROUP BY y HAVING z'", None, None),
+    # predicates whose parsed node starts after their left operand
+    "predicate_tails": (
+        "note IN ('x GROUP BY y HAVING z', 'w') AND cat IS DISTINCT FROM 'q'",
+        "COUNT(*) BETWEEN 1 AND 5",
+        "n BETWEEN 1 AND 5",
+    ),
+}
+
+
+@pytest.mark.parametrize("case", sorted(_CLAUSE_SPELLINGS))
+def test_mv_clause_spellings_come_from_the_parser(catalog, spark, case):
+    """Clause boundaries and stored spellings come from Spark's parser:
+    the WHERE and HAVING text is recorded exactly as written (HAVING
+    over the visible columns), and refresh stays incremental."""
+    where, having, stored_having = _CLAUSE_SPELLINGS[case]
+    schema = "cat string, note string"
+    t = catalog.create_table(
+        "gold.lit", spark.createDataFrame([], schema).schema
+    )
+    t.append(
+        spark.createDataFrame(
+            [("a", "x GROUP BY y HAVING z"), ("b", "other")], schema
+        )
+    )
+    q = f"SELECT cat, COUNT(*) AS n FROM gold_lit WHERE {where} GROUP BY cat"
+    if having:
+        q += f" HAVING {having}"
+    mv = catalog.create_materialized_view("gold.lit_mv", q)
+    props = mv.properties()
+    assert props["mv.refresh_mode"] == "agg"
+    assert props["mv.where"] == where
+    assert props.get("mv.having") == stored_having
+    t.append(
+        spark.createDataFrame(
+            [("a", "x GROUP BY y HAVING z"), ("c", "x GROUP BY y HAVING z")],
+            schema,
+        )
+    )
+    assert catalog.refresh_materialized_view("gold.lit_mv").operation == (
+        "merge"
+    )
+    got = catalog.sql("SELECT * FROM gold_lit_mv").collect()
+    assert sorted(got, key=repr) == sorted(catalog.sql(q).collect(), key=repr)
+
+
 def test_mv_agg_shape_gates(catalog, spark):
     """HAVING over an unselected aggregate / non-double AVG /
     SUM DISTINCT / multiple distinct arguments / nondeterministic or

@@ -1130,3 +1130,45 @@ def test_epoch_race_branch_skips_query_fingerprint(
     monkeypatch.setattr(_os, "link", racing_link)
     base = t._reserve_identity_epoch("raceq:0", 2)
     assert base == {"rid": 42}  # the twin's range, fingerprint skipped
+
+
+def test_scan_memo_threads_and_session_key(catalog, spark, monkeypatch):
+    """The scan-plan memo is shared by every thread that scans (the MV
+    watcher and scheduler threads included): concurrent hits, inserts
+    and LRU evictions must not race, and a plan memoized for one session
+    is never served to another."""
+    import sys
+    from concurrent.futures import ThreadPoolExecutor
+
+    from apache_iceberg_pyiceberg_local_data_lakehouse_spark import table
+
+    t = catalog.create_table("gold.memo", TICK_SCHEMA, [])
+    snaps = []
+    for i in range(4):
+        t.append(tick_df(spark, start=f"2024-0{i + 1}-01 00:00:00", n=i + 1))
+        snaps.append(t.snapshot())
+    # a memo smaller than the working set evicts on nearly every insert
+    monkeypatch.setattr(table, "_SCAN_DF_CACHE_MAX", 2)
+    table._SCAN_DF_CACHE.clear()
+
+    def hammer(k):
+        return [t.scan(snapshot=snaps[(k + i) % 4]) for i in range(12)]
+
+    interval = sys.getswitchinterval()
+    sys.setswitchinterval(1e-6)  # switch threads between the dict steps
+    try:
+        with ThreadPoolExecutor(max_workers=8) as pool:
+            outs = list(pool.map(hammer, range(8), timeout=300))
+    finally:
+        sys.setswitchinterval(interval)
+    assert sum(len(out) for out in outs) == 96
+    assert len(table._SCAN_DF_CACHE) <= 2
+    assert [t.scan(snapshot=s).count() for s in snaps] == [1, 3, 6, 10]
+
+    other = spark.newSession()  # shares the context; the suite's
+    # session keeps running
+    ot = LakehouseCatalog(other, catalog.warehouse).load_table("gold.memo")
+    mine = t.scan(snapshot=snaps[-1])
+    theirs = ot.scan(snapshot=ot.snapshot(snaps[-1].version))
+    assert mine.sparkSession is spark
+    assert theirs.sparkSession is other
